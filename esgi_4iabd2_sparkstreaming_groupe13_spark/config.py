@@ -1,25 +1,14 @@
 """Engine configuration.
 
-Mirrors the knobs of the reference's ``application.conf`` (producer
-source/batching at :2-32, consumer stream/output at :44-92) as plain
-dataclasses — no Typesafe-config dependency, no hidden defaults.
+Mirrors the consumer stream/output knobs of the reference's
+``application.conf`` (:44-92) as a plain dataclass — no Typesafe-config
+dependency, no hidden defaults. The producer's knobs are arguments of
+``streaming.producer.replay_to_ndjson`` and the ``producer`` CLI.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
-
-@dataclass(frozen=True)
-class ProducerConfig:
-    """Replay-producer knobs (reference ``taxi.producer``)."""
-
-    source_file: str = "data/yellow_tripdata_preview.csv"
-    output_dir: str = "data/streaming"
-    batch_size: int = 10
-    interval_seconds: float = 10.0
-    max_batches: int | None = None  # None = drain the whole source
-    file_prefix: str = "taxi-batch"
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -27,7 +16,6 @@ class ConsumerConfig:
     """Streaming-consumer knobs (reference ``taxi.consumer``)."""
 
     input_dir: str = "data/streaming"
-    input_format: str = "json"  # NDJSON batch files
     max_files_per_trigger: int = 1
     trigger_seconds: float = 10.0
     output_dir: str = "data/processed"
@@ -41,18 +29,3 @@ class ConsumerConfig:
     #: overwrites its own partition, making recovery idempotent
     #: (exactly-once per directory).
     idempotent_sinks: bool = False
-    #: Launch the four per-batch sink writes as CONCURRENT Spark jobs
-    #: (they are independent actions over the same persisted
-    #: projection, so per-job scheduling overhead overlaps instead of
-    #: serializing — the micro-batch wall-time becomes max(sink) not
-    #: sum(sinks)). Output contents and per-directory semantics are
-    #: identical either way; only intra-batch write ORDER becomes
-    #: unordered, which the reference never promised. False restores
-    #: the reference's sequential writes.
-    parallel_sinks: bool = True
-
-
-@dataclass(frozen=True)
-class EngineConfig:
-    producer: ProducerConfig = field(default_factory=ProducerConfig)
-    consumer: ConsumerConfig = field(default_factory=ConsumerConfig)

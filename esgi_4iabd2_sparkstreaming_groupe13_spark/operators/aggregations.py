@@ -43,11 +43,6 @@ def total_count(df: DataFrame) -> DataFrame:
     return df.agg(F.count("*").alias("n_rows"))
 
 
-def is_empty(df: DataFrame) -> bool:
-    """A4 (``StreamProcessor.scala:151``): cheap emptiness probe."""
-    return df.isEmpty()
-
-
 def decimal_sum(col: str | Column, scale: int = 2, precision: int = 18) -> Column:
     """Exact (order-independent) monetary sum, surfaced as double."""
     c = F.col(col) if isinstance(col, str) else col

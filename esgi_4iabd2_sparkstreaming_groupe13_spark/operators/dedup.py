@@ -581,10 +581,13 @@ def minhash_signatures(
     max_chars: int = 512,
     seed: int = 42,
 ) -> DataFrame:
-    """Per-doc MinHash signature as ``array<long>`` — one narrow pass,
-    no shuffle. Shingles are md5-hashed ONCE into an int array, then
-    each signature element is a cheap affine permutation + array_min
-    over it (engine-portable md5-based hashing)."""
+    """Per-doc MinHash signature as ``array<long>``. Shingles are
+    exploded to one row each and md5-hashed ONCE (engine-portable
+    hashing); each signature element is then a MIN aggregate of a cheap
+    affine permutation of that hash, grouped by ``id_col``. Partial
+    aggregation keeps the one shuffle at one row per doc — see
+    :func:`_signatures_from_shingles` for why this beats a narrow
+    ``array_min`` projection."""
     sh = with_shingles(df, text_col, id_col, n, max_chars)
     return _signatures_from_shingles(sh, id_col, n_hashes, seed)
 

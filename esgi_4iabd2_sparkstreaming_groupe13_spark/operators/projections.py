@@ -9,8 +9,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..schemas import RAW_OUTPUT_COLUMNS
-
 #: The consumer's SQL projection (P1, ``StreamProcessor.scala:107-121``)
 #: as a SQL string over the registered view. Kept in SQL form on purpose:
 #: the reference's one "catalog" usage is this temp-view + spark.sql pair
@@ -61,19 +59,9 @@ def repair_null_timestamps(
     return out
 
 
-def select_trip_output(df: DataFrame) -> DataFrame:
-    """P1 applied directly to a DataFrame (no temp view needed)."""
-    return df.select(*RAW_OUTPUT_COLUMNS)
-
-
 def filter_range(df: DataFrame, col: str, lo, hi) -> DataFrame:
     """P4/F5 (``ProducerOperations.scala:142``): inclusive range filter."""
     return df.filter(F.col(col).between(lo, hi))
-
-
-def drop_columns(df: DataFrame, *cols: str) -> DataFrame:
-    """P5: drop transient columns."""
-    return df.drop(*cols)
 
 
 def rename_to(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
@@ -84,13 +72,6 @@ def rename_to(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
 def tag(df: DataFrame, name: str, value: str) -> DataFrame:
     """P7: literal tag column (``aggregation_type``)."""
     return df.withColumn(name, F.lit(value))
-
-
-def project_existing(df: DataFrame, wanted: list[str]) -> DataFrame:
-    """P8 (``taxi_dashboard.py:143-152``): defensive projection — keep
-    only the desired columns that actually exist."""
-    present = [c for c in wanted if c in df.columns]
-    return df.select(*present)
 
 
 def unpivot_long(

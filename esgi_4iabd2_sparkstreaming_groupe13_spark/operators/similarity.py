@@ -807,195 +807,196 @@ def kmeans_fit(
     if src.rdd.getNumPartitions() < para:
         src = src.repartition(para)
     src = src.persist()
-    # r16 optimization round (guide §2.4, §5): centroids are k×dim
-    # doubles — metadata-sized, the same class as this function's
-    # per-iteration scalar probes — so each round they live as a
-    # DRIVER-side list and ride back into the plan as a ONE-ROW
-    # broadcast matrix column (array<array<double>> + cell-id array).
-    # The previous shape crossJoined a k-row broadcast centroid FRAME
-    # and picked the argmax with a Window.partitionBy(_vid) row_number
-    # — a full shuffle+sort of n×k scored rows per Lloyd iteration and
-    # per seeding round, plus an eager localCheckpoint job each. Now
-    # assignment is a NARROW map: argmax over zip_with(matrix, ids)
-    # structs of (sim, -cell_id) — struct ordering = max sim, then min
-    # cell on ties, exactly the old DESC _csim, ASC cell_id row_number
-    # pick including NaN-largest double ordering — so the corpus never
-    # shuffles at all (only the (cell, dim) mean partials move), and
-    # each seeding round is one TakeOrdered job. The matrix is DATA,
-    # not literals, deliberately: baking k×dim literal constants into
-    # the projection changes the generated source every iteration and
-    # forces a multi-second Janino recompile per round (measured 5.5 s
-    # first-execute vs 0.17 s warm at sf0.1); the data-driven
-    # expression compiles once and hits the codegen cache for every
-    # subsequent round. Bit parity: the per-element arithmetic is the
-    # same expressions over the same doubles (driver round-trips are
-    # IEEE-exact), and the convergence shift mirrors
-    # dot_expr/norm_expr's sequential fold order in Python, so
-    # iteration counts and centroids are unchanged (cross-tree check
-    # at the rewrite: bit-identical centroid dumps, iteration counts
-    # and shifts at sf0.01 AND sf0.1 for cosine and l2/PQ; tie
-    # semantics pinned by test_kmeans_assignment_tie_prefers_min_cell).
-    import math
+    try:
+        # r16 optimization round (guide §2.4, §5): centroids are k×dim
+        # doubles — metadata-sized, the same class as this function's
+        # per-iteration scalar probes — so each round they live as a
+        # DRIVER-side list and ride back into the plan as a ONE-ROW
+        # broadcast matrix column (array<array<double>> + cell-id array).
+        # The previous shape crossJoined a k-row broadcast centroid FRAME
+        # and picked the argmax with a Window.partitionBy(_vid) row_number
+        # — a full shuffle+sort of n×k scored rows per Lloyd iteration and
+        # per seeding round, plus an eager localCheckpoint job each. Now
+        # assignment is a NARROW map: argmax over zip_with(matrix, ids)
+        # structs of (sim, -cell_id) — struct ordering = max sim, then min
+        # cell on ties, exactly the old DESC _csim, ASC cell_id row_number
+        # pick including NaN-largest double ordering — so the corpus never
+        # shuffles at all (only the (cell, dim) mean partials move), and
+        # each seeding round is one TakeOrdered job. The matrix is DATA,
+        # not literals, deliberately: baking k×dim literal constants into
+        # the projection changes the generated source every iteration and
+        # forces a multi-second Janino recompile per round (measured 5.5 s
+        # first-execute vs 0.17 s warm at sf0.1); the data-driven
+        # expression compiles once and hits the codegen cache for every
+        # subsequent round. Bit parity: the per-element arithmetic is the
+        # same expressions over the same doubles (driver round-trips are
+        # IEEE-exact), and the convergence shift mirrors
+        # dot_expr/norm_expr's sequential fold order in Python, so
+        # iteration counts and centroids are unchanged (cross-tree check
+        # at the rewrite: bit-identical centroid dumps, iteration counts
+        # and shifts at sf0.01 AND sf0.1 for cosine and l2/PQ; tie
+        # semantics pinned by test_kmeans_assignment_tie_prefers_min_cell).
+        import math
 
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
+        from pyspark.sql.types import (
+            ArrayType,
+            DoubleType,
+            IntegerType,
+            StructField,
+            StructType,
+        )
 
-    spark = embeddings.sparkSession
-    _mat_schema = StructType(
-        [
-            StructField(
-                "_cmat", ArrayType(ArrayType(DoubleType())), False
-            ),
-            StructField("_negc", ArrayType(IntegerType()), False),
-        ]
-    )
+        spark = embeddings.sparkSession
+        _mat_schema = StructType(
+            [
+                StructField(
+                    "_cmat", ArrayType(ArrayType(DoubleType())), False
+                ),
+                StructField("_negc", ArrayType(IntegerType()), False),
+            ]
+        )
 
-    def _with_matrix(frame, cents_py):
-        """crossJoin the one-row (matrix, neg-ids) frame — broadcast of
-        a single local row: no shuffle, no per-round codegen churn."""
-        row = [
-            (
-                [list(v) for _, v in cents_py],
-                [-cid for cid, _ in cents_py],
+        def _with_matrix(frame, cents_py):
+            """crossJoin the one-row (matrix, neg-ids) frame — broadcast of
+            a single local row: no shuffle, no per-round codegen churn."""
+            row = [
+                (
+                    [list(v) for _, v in cents_py],
+                    [-cid for cid, _ in cents_py],
+                )
+            ]
+            return frame.crossJoin(
+                F.broadcast(spark.createDataFrame(row, _mat_schema))
             )
-        ]
-        return frame.crossJoin(
-            F.broadcast(spark.createDataFrame(row, _mat_schema))
-        )
 
-    def _py_dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + float(x) * float(y)
-        return acc
-
-    def _py_shift(newv, oldv):
-        # mirrors shift_expr: -sim(new, old) for l2 (= squared dist),
-        # 1 − cosine for spherical — same sequential fold as dot_expr
-        if l2:
+        def _py_dot(a, b):
             acc = 0.0
-            for x, y in zip(newv, oldv):
-                d = float(x) - float(y)
-                acc = acc + d * d
+            for x, y in zip(a, b):
+                acc = acc + float(x) * float(y)
             return acc
-        denom = math.sqrt(_py_dot(newv, newv)) * math.sqrt(
-            _py_dot(oldv, oldv)
-        )
-        return 1.0 - (_py_dot(newv, oldv) / denom)
 
-    seed_rows = (
-        src.withColumn(
-            "_h",
-            md5_int(F.concat(F.lit("kmeans:"), F.col("_vid").cast("string"))),
-        )
-        .orderBy("_h", "_vid")
-        .limit(1)
-        .select("_v")
-        .collect()
-    )
-    cents_schema = StructType(
-        [
-            StructField("cell_id", IntegerType(), False),
-            StructField("cvec", ArrayType(DoubleType()), True),
-        ]
-    )
-    if not seed_rows:  # empty input: empty model, same as the old path
-        src.unpersist()
-        return spark.createDataFrame([], cents_schema), 1, 0.0
-    cents_py: list[tuple[int, list[float]]] = [
-        (0, [float(x) for x in seed_rows[0]["_v"]])
-    ]
-    for i in range(1, k):
-        # max over current seeds == the old groupBy(_vid).agg(max sim):
-        # array_max and the MAX aggregate share double ordering
-        cl = F.array_max(
-            F.transform(F.col("_cmat"), lambda cv: sim(F.col("_v"), cv))
-        )
-        far = (
-            _with_matrix(src, cents_py)
-            .select("_vid", "_v", cl.alias("_cl"))
-            .orderBy(F.asc("_cl"), F.asc("_vid"))
+        def _py_shift(newv, oldv):
+            # mirrors shift_expr: -sim(new, old) for l2 (= squared dist),
+            # 1 − cosine for spherical — same sequential fold as dot_expr
+            if l2:
+                acc = 0.0
+                for x, y in zip(newv, oldv):
+                    d = float(x) - float(y)
+                    acc = acc + d * d
+                return acc
+            denom = math.sqrt(_py_dot(newv, newv)) * math.sqrt(
+                _py_dot(oldv, oldv)
+            )
+            return 1.0 - (_py_dot(newv, oldv) / denom)
+
+        seed_rows = (
+            src.withColumn(
+                "_h",
+                md5_int(F.concat(F.lit("kmeans:"), F.col("_vid").cast("string"))),
+            )
+            .orderBy("_h", "_vid")
             .limit(1)
             .select("_v")
             .collect()
         )
-        cents_py.append((i, [float(x) for x in far[0]["_v"]]))
+        cents_schema = StructType(
+            [
+                StructField("cell_id", IntegerType(), False),
+                StructField("cvec", ArrayType(DoubleType()), True),
+            ]
+        )
+        if not seed_rows:  # empty input: empty model, same as the old path
+            return spark.createDataFrame([], cents_schema), 1, 0.0
+        cents_py: list[tuple[int, list[float]]] = [
+            (0, [float(x) for x in seed_rows[0]["_v"]])
+        ]
+        for i in range(1, k):
+            # max over current seeds == the old groupBy(_vid).agg(max sim):
+            # array_max and the MAX aggregate share double ordering
+            cl = F.array_max(
+                F.transform(F.col("_cmat"), lambda cv: sim(F.col("_v"), cv))
+            )
+            far = (
+                _with_matrix(src, cents_py)
+                .select("_vid", "_v", cl.alias("_cl"))
+                .orderBy(F.asc("_cl"), F.asc("_vid"))
+                .limit(1)
+                .select("_v")
+                .collect()
+            )
+            cents_py.append((i, [float(x) for x in far[0]["_v"]]))
 
-    shift = float("inf")
-    iterations = 0
-    for iterations in range(1, max_iterations + 1):
-        best = F.array_max(
-            F.zip_with(
-                F.col("_cmat"),
-                F.col("_negc"),
-                lambda cv, nc: F.struct(
-                    sim(F.col("_v"), cv).alias("_s"), nc.alias("_nc")
-                ),
+        shift = float("inf")
+        iterations = 0
+        for iterations in range(1, max_iterations + 1):
+            best = F.array_max(
+                F.zip_with(
+                    F.col("_cmat"),
+                    F.col("_negc"),
+                    lambda cv, nc: F.struct(
+                        sim(F.col("_v"), cv).alias("_s"), nc.alias("_nc")
+                    ),
+                )
             )
-        )
-        assigned = _with_matrix(src, cents_py).select(
-            (-best["_nc"]).cast("int").alias("cell_id"), F.col("_v")
-        )
-        # ONE per-cell aggregate with a decimal sum column PER
-        # DIMENSION (r17, guide §2.4) — the dimensionality is known
-        # from the seed vector, so the old posexplode → (cell, pos)
-        # aggregate → (cell) collect_list re-assembly (two exchanges +
-        # a sort per round) collapses into a single k-row aggregate.
-        # Exact same arithmetic: decimal accumulation keeps each mean
-        # reduction-order-free, the per-dim divisor counts exactly the
-        # rows posexplode would have emitted for that pos (size > i —
-        # NULL elements included, short vectors excluded), and the
-        # double division is the same sum.cast(double)/count op.
-        dim = len(cents_py[0][1])
-        mean_cols = [
-            (
-                F.sum(F.col("_v")[i].cast("decimal(28,12)")).cast("double")
-                / F.count(F.when(F.size(F.col("_v")) > i, F.lit(1)))
-            ).alias(f"_m{i}")
-            for i in range(dim)
-        ]
-        raw = (
-            assigned.groupBy("cell_id")
-            .agg(*mean_cols)
-            .select(
-                "cell_id",
-                F.array(*[F.col(f"_m{i}") for i in range(dim)]).alias(
-                    "_raw"
-                ),
+            assigned = _with_matrix(src, cents_py).select(
+                (-best["_nc"]).cast("int").alias("cell_id"), F.col("_v")
             )
-        )
-        if l2:
-            stepped = raw.select("cell_id", F.col("_raw").alias("_new"))
-        else:
-            rnorm = norm_expr(F.col("_raw"))
-            stepped = raw.select(
-                "cell_id",
-                F.when(rnorm > 0, F.transform("_raw", lambda x: x / rnorm))
-                .otherwise(F.col("_raw"))
-                .alias("_new"),
+            # ONE per-cell aggregate with a decimal sum column PER
+            # DIMENSION (r17, guide §2.4) — the dimensionality is known
+            # from the seed vector, so the old posexplode → (cell, pos)
+            # aggregate → (cell) collect_list re-assembly (two exchanges +
+            # a sort per round) collapses into a single k-row aggregate.
+            # Exact same arithmetic: decimal accumulation keeps each mean
+            # reduction-order-free, the per-dim divisor counts exactly the
+            # rows posexplode would have emitted for that pos (size > i —
+            # NULL elements included, short vectors excluded), and the
+            # double division is the same sum.cast(double)/count op.
+            dim = len(cents_py[0][1])
+            mean_cols = [
+                (
+                    F.sum(F.col("_v")[i].cast("decimal(28,12)")).cast("double")
+                    / F.count(F.when(F.size(F.col("_v")) > i, F.lit(1)))
+                ).alias(f"_m{i}")
+                for i in range(dim)
+            ]
+            raw = (
+                assigned.groupBy("cell_id")
+                .agg(*mean_cols)
+                .select(
+                    "cell_id",
+                    F.array(*[F.col(f"_m{i}") for i in range(dim)]).alias(
+                        "_raw"
+                    ),
+                )
             )
-        new_rows = stepped.collect()  # ≤ k rows — the ONE job per round
-        new_map = {
-            r["cell_id"]: [float(x) for x in r["_new"]] for r in new_rows
-        }
-        merged = [
-            (cid, new_map.get(cid, old), old) for cid, old in cents_py
-        ]
-        shift = max(_py_shift(newv, oldv) for cid, newv, oldv in merged)
-        shift = shift or 0.0  # mirrors the old `first()[0] or 0.0`
-        cents_py = [(cid, newv) for cid, newv, _ in merged]
-        if shift < tol:
-            break
-    cents = spark.createDataFrame(
-        [(cid, v) for cid, v in cents_py], cents_schema
-    )
-    src.unpersist()
-    return cents, iterations, shift
+            if l2:
+                stepped = raw.select("cell_id", F.col("_raw").alias("_new"))
+            else:
+                rnorm = norm_expr(F.col("_raw"))
+                stepped = raw.select(
+                    "cell_id",
+                    F.when(rnorm > 0, F.transform("_raw", lambda x: x / rnorm))
+                    .otherwise(F.col("_raw"))
+                    .alias("_new"),
+                )
+            new_rows = stepped.collect()  # ≤ k rows — the ONE job per round
+            new_map = {
+                r["cell_id"]: [float(x) for x in r["_new"]] for r in new_rows
+            }
+            merged = [
+                (cid, new_map.get(cid, old), old) for cid, old in cents_py
+            ]
+            shift = max(_py_shift(newv, oldv) for cid, newv, oldv in merged)
+            shift = shift or 0.0  # mirrors the old `first()[0] or 0.0`
+            cents_py = [(cid, newv) for cid, newv, _ in merged]
+            if shift < tol:
+                break
+        cents = spark.createDataFrame(
+            [(cid, v) for cid, v in cents_py], cents_schema
+        )
+        return cents, iterations, shift
+    finally:
+        src.unpersist()
 
 
 def embed_standardize(

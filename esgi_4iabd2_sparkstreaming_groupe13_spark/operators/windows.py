@@ -280,20 +280,6 @@ def global_running_sum(
     )
 
 
-def topn_per_group(
-    df: DataFrame, group_col: str, order_col: str, n: int, rank_col: str = "rn"
-) -> DataFrame:
-    """Partitioned window top-N (the partitioned form the reference
-    lacks): rank within each group, keep the first ``n``. Catalyst ≥3.5
-    rewrites this to WindowGroupLimit — per-partition heap, no full
-    sort of each group."""
-    w = Window.partitionBy(group_col).orderBy(F.col(order_col).desc())
-    return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= n)
-    )
-
-
 def lag_lead_delta(
     df: DataFrame,
     part_col: str,

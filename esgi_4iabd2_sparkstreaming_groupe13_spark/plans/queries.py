@@ -1548,8 +1548,9 @@ SESSION_GAP_S = 6 * 3600
 
 def q_sessionize(spark, sf_dir):
     """T7 extension, batch-equivalence form: gaps-and-islands user
-    sessionization — the oracle the streaming applyInPandasWithState
-    operator (streaming/stateful.py) is tested against."""
+    sessionization — the oracle the streaming ``session_window``
+    operator (streaming/stateful.py ``sessionize_native``) is tested
+    against."""
     from ..streaming.stateful import sessionize_batch_oracle
 
     ev = _t(spark, sf_dir, "events")
@@ -1557,13 +1558,13 @@ def q_sessionize(spark, sf_dir):
 
 
 def q_session_window(spark, sf_dir):
-    """Native ``session_window`` sessionization (new r6, VERDICT r5
-    item 8): the fully-JVM-side aggregate path — gap-merging session
-    windows inside codegen'd hash aggregation, no Python worker.
-    Boundary-verified identical to the applyInPandasWithState operator
-    (merge at diff == gap, split at diff > gap), so the same
-    gaps-and-islands SQL is the oracle; the stream==batch pytest pins
-    the streaming run of the SAME operator to this batch result."""
+    """Native ``session_window`` sessionization — the streaming
+    sessionizer's batch run: gap-merging session windows inside
+    codegen'd hash aggregation, no Python worker. Its boundary rule
+    (merge at diff == gap, split at diff > gap) is the gaps-and-islands
+    rule of ``q_sessionize``, so the same SQL is the oracle; the
+    stream==batch pytest pins the streaming run of the SAME operator
+    to this batch result."""
     from ..streaming.stateful import sessionize_native
 
     ev = _t(spark, sf_dir, "events")

@@ -1,8 +1,7 @@
-from .processor import build_trip_pipeline, process_batch, start_consumer
+from .processor import process_batch, start_consumer
 from .producer import replay_to_ndjson
 
 __all__ = [
-    "build_trip_pipeline",
     "process_batch",
     "start_consumer",
     "replay_to_ndjson",

@@ -25,8 +25,9 @@ The scale-up fix (not needed for parity) is partitioning every sink by
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import ConsumerConfig
@@ -76,7 +77,6 @@ def process_batch(
     output_dir: str,
     output_format: str = "json",
     idempotent: bool = False,
-    parallel: bool = True,
 ) -> None:
     """The ``foreachBatch`` body (K2, ``StreamProcessor.scala:148-192``).
 
@@ -90,8 +90,10 @@ def process_batch(
     partitioned by ``batch_id`` and written with dynamic partition
     overwrite, so a replayed micro-batch replaces its own partition —
     exactly-once per directory without a transactional table format.
+    The overwrite mode is a per-writer option, never a session conf
+    change, so other queries on the session are unaffected.
 
-    ``parallel=True`` submits the four writes as concurrent Spark jobs
+    The four writes run as concurrent Spark jobs
     (threads; py4j calls are thread-safe, and the jobs share the
     persisted projection so no input work is repeated). A micro-batch
     with small per-sink job times is SCHEDULING-bound, not
@@ -106,7 +108,6 @@ def process_batch(
     """
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
     projected = enrich_and_project(batch_df, batch_id)
     projected.persist()
     # no explicit cache-materialization job: the block store computes
@@ -121,11 +122,9 @@ def process_batch(
             name, frame = item
             path = f"{output_dir}/{name}"
             if idempotent:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", "dynamic"
-                )
                 (
                     frame.write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("batch_id")
                     .format(output_format)
                     .save(path)
@@ -133,28 +132,12 @@ def process_batch(
             else:
                 frame.write.mode("append").format(output_format).save(path)
 
-        if parallel:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=len(frames)) as pool:
-                # list() re-raises the first sink exception after all
-                # futures settle → the batch fails → engine retries
-                list(pool.map(write_one, frames.items()))
-        else:
-            for item in frames.items():
-                write_one(item)
+        with ThreadPoolExecutor(max_workers=len(frames)) as pool:
+            # list() re-raises the first sink exception after all
+            # futures settle → the batch fails → engine retries
+            list(pool.map(write_one, frames.items()))
     finally:
         projected.unpersist()
-
-
-def build_trip_pipeline(
-    spark: SparkSession, cfg: ConsumerConfig
-) -> DataFrame:
-    """Source + the streaming plan (enrichment happens per batch inside
-    ``foreachBatch`` so batch_id is per-micro-batch)."""
-    return create_trip_stream(
-        spark, cfg.input_dir, max_files_per_trigger=cfg.max_files_per_trigger
-    )
 
 
 def start_consumer(
@@ -165,7 +148,11 @@ def start_consumer(
     """Wire the full consumer (K1/K2/T1-T4). ``available_now=True``
     drains everything currently in the directory then stops — the
     batch-equivalence test mode (SURVEY §5.3)."""
-    stream = build_trip_pipeline(spark, cfg)
+    # enrichment happens per batch inside foreachBatch, so batch_id is
+    # per-micro-batch
+    stream = create_trip_stream(
+        spark, cfg.input_dir, max_files_per_trigger=cfg.max_files_per_trigger
+    )
 
     if cfg.enable_console:
         writer = (
@@ -184,7 +171,6 @@ def start_consumer(
                     cfg.output_dir,
                     cfg.output_format,
                     idempotent=cfg.idempotent_sinks,
-                    parallel=cfg.parallel_sinks,
                 )
             )
         )

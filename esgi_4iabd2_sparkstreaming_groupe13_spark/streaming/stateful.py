@@ -1,168 +1,24 @@
-"""Custom stateful streaming operators (T7 upgrade — the reference has
-no cross-batch state; SURVEY §2.9 T7).
+"""Stateful streaming operators (T7 upgrade — the reference has no
+cross-batch state; SURVEY §2.9 T7).
 
-``sessionize`` implements user sessionization — the canonical custom
-stateful operator Spark's built-ins don't directly express — with
-``applyInPandasWithState``. Design: the operator BUFFERS each user's
-event times in state and only emits a session once the event-time
-watermark has passed ``session_end + gap`` — the session can no longer
-change. This makes the operator correct under bounded disorder
-(events may arrive out of order across micro-batches up to the
-watermark delay), which a naive carry-forward-last-timestamp design
-is not.
+Sessionization is expressed with the engine's declarative operators:
+:func:`sessionize_native` groups by ``user_id`` and a built-in
+``session_window``, so gap merging, state and watermark eviction all
+stay inside the JVM's hash aggregation — no Python worker and no
+custom state schema. It runs unchanged on batch and streaming frames;
+:func:`sessionize_batch_oracle` (window-function gaps-and-islands) is
+its equivalence oracle.
 
-Scale notes: state is partitioned by the groupBy key (user_id) in the
-state store — executors shard it linearly. Per-user state is bounded
-by (watermark delay + gap) worth of events, evicted on emission. Arrow
-batches keep the Python-side work vectorized; EVENT-TIME timeouts
-flush quiet keys when the watermark passes their session close point
-(processing-time timeouts would keep availableNow backfill runs
-spinning empty micro-batches until the wall-clock fires).
+The dedup and media operators below are watermark-bounded
+``dropDuplicatesWithinWatermark`` stages: state per key is evicted
+once event time passes the watermark, so the state store holds only
+(watermark delay x arrival rate) keys however long the stream runs.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-SESSION_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("session_start", T.TimestampType(), True),
-        T.StructField("session_end", T.TimestampType(), True),
-        T.StructField("n_events", T.LongType(), True),
-        T.StructField("final", T.BooleanType(), True),
-    ]
-)
-
-#: buffered event times (µs since epoch), bounded by watermark + gap
-STATE_SCHEMA = "buf array<bigint>"
-
-
-def _split_sessions(buf: list[int], gap_us: int) -> list[tuple[int, int, int]]:
-    """Gaps-and-islands over a sorted timestamp list →
-    (start, end, n) per session."""
-    sessions = []
-    start = prev = buf[0]
-    n = 0
-    for t in buf:
-        if t - prev > gap_us:
-            sessions.append((start, prev, n))
-            start, n = t, 0
-        prev = t
-        n += 1
-    sessions.append((start, prev, n))
-    return sessions
-
-
-def _emit(user_id: int, rows: list[tuple[int, int, int]], final: bool) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "user_id": [user_id] * len(rows),
-            "session_start": [pd.Timestamp(r[0], unit="us") for r in rows],
-            "session_end": [pd.Timestamp(r[1], unit="us") for r in rows],
-            "n_events": [r[2] for r in rows],
-            "final": [final] * len(rows),
-        }
-    )
-
-
-def _sessionize_fn(gap_seconds: int):
-    gap_us = gap_seconds * 1_000_000
-
-    def fn(
-        key: tuple,
-        batches: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-
-        # On an event-time timeout `batches` is empty — the buffered
-        # events are re-evaluated against the advanced watermark, which
-        # by construction of the timeout now closes at least one
-        # session. Data-driven invocations merge the new events first.
-        buf: list[int] = list(state.get[0]) if state.exists else []
-        if not state.hasTimedOut:
-            for pdf in batches:
-                buf.extend(
-                    int(v.value // 1000) for v in pd.to_datetime(pdf["ts"])
-                )
-        if not buf:
-            if state.exists:
-                state.remove()
-            return
-        buf.sort()
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        sessions = _split_sessions(buf, gap_us)
-        # a session is immutable once no future event can extend or
-        # merge it: watermark has passed its end by more than the gap
-        closed = [s for s in sessions if s[1] + gap_us < wm_us]
-        open_ = [s for s in sessions if s[1] + gap_us >= wm_us]
-
-        remaining = [t for t in buf if not any(s[0] <= t <= s[1] for s in closed)]
-        if remaining:
-            state.update((remaining,))
-            # Event-time wake-up at the instant the earliest open
-            # session becomes closeable (end + gap; +1 ms because the
-            # close test is strict). Clamped above the current
-            # watermark — setTimeoutTimestamp rejects timestamps the
-            # watermark has already passed.
-            earliest_close_ms = (
-                min(s[1] for s in open_) // 1000 + gap_seconds * 1000 + 1
-            )
-            state.setTimeoutTimestamp(
-                max(earliest_close_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        else:
-            state.remove()
-
-        if closed:
-            yield _emit(user_id, closed, True)
-
-    return fn
-
-
-def sessionize(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Sessionize a streaming events frame by ``user_id`` with an
-    inactivity gap.
-
-    Emits ``final=True`` rows exactly once per session, when the
-    watermark guarantees the session can no longer change. Quiet keys
-    (no further events) are flushed by EVENT-TIME timeouts set at
-    ``earliest_open_session_end + gap``: the watermark passing that
-    point re-invokes the key and closes the session — still
-    watermark-confirmed, so every emission is final and exactly-once.
-
-    Processing-time timeouts are deliberately NOT used: a pending
-    processing-time wake-up keeps an ``availableNow`` (backfill) run
-    spinning empty micro-batches until the wall-clock timeout fires,
-    so the query never terminates. Event-time timeouts can only fire
-    on watermark movement — when the data is exhausted the query
-    stops, which makes the same operator correct for both continuous
-    and catch-up runs.
-    """
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_fn(gap_seconds),
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
 
 
 def sessionize_native(
@@ -170,28 +26,20 @@ def sessionize_native(
     gap_seconds: int = 1800,
     watermark: str | None = None,
 ) -> DataFrame:
-    """Built-in ``session_window`` sessionization (VERDICT r5 item 8)
-    — the fully-JVM-side path for the AGGREGATE case: when a session
-    only needs (start, end, count)-style aggregates, Spark's native
-    gap-merging session windows keep the whole operator inside
-    codegen'd hash aggregation with state handled by the engine — no
-    Arrow transfer, no Python worker, no custom state schema. The
-    ``applyInPandasWithState`` operator (:func:`sessionize`) remains
-    the path for custom per-session payloads (event buffers, custom
-    emission policy).
+    """Sessionize ``events`` by ``user_id`` with an inactivity gap,
+    on Spark's built-in gap-merging ``session_window``.
 
-    Boundary semantics verified identical to :func:`sessionize` and
-    the gaps-and-islands oracle: an event exactly ``gap`` after its
-    predecessor MERGES (Spark merges when next_start ≤ prev_end;
-    split requires diff > gap), so all three forms agree bit-for-bit.
-    ``session_start``/``session_end`` are emitted as min/max event
-    time (not the window's end = last + gap), matching the custom
-    operator's output schema.
+    Emits one row per session: ``(user_id, session_start, session_end,
+    n_events)``, with start/end the min/max event time (not the
+    window's end = last + gap). An event exactly ``gap`` after its
+    predecessor MERGES (Spark merges when next_start <= prev_end; a
+    split needs diff > gap), which is the boundary rule of
+    :func:`sessionize_batch_oracle` and the DuckDB oracle.
 
-    Works unchanged on a batch or streaming frame; pass ``watermark``
-    for streaming (append mode emits a session once the watermark
-    passes its close point — same finality contract as the custom
-    operator's ``final=True`` rows).
+    Works unchanged on a batch or streaming frame. Pass ``watermark``
+    for streaming: append mode then emits each session exactly once,
+    when the watermark passes its close point (the session can no
+    longer change), and the engine evicts its state.
     """
     src = events.withWatermark("ts", watermark) if watermark else events
     return (
@@ -209,14 +57,14 @@ def sessionize_native(
 
 def sessionize_batch_oracle(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Batch-mode session computation (classic gaps-and-islands via
-    window functions) — the equivalence oracle for the stateful
-    streaming operator: ``final=True`` streaming sessions must be a
-    subset of (and at steady state equal to) these."""
+    window functions) — the equivalence oracle for
+    :func:`sessionize_native`: its streaming sessions must be a subset
+    of (and at steady state equal to) these."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy("ts")
     # gap test in integer microseconds — exact, and identical to the
-    # streaming operator's µs arithmetic and the DuckDB oracle
+    # DuckDB oracle's µs arithmetic
     gapped = (
         events.withColumn("prev_ts", F.lag("ts").over(w))
         .withColumn(
@@ -240,133 +88,6 @@ def sessionize_batch_oracle(events: DataFrame, gap_seconds: int = 1800) -> DataF
         F.min("ts").alias("session_start"),
         F.max("ts").alias("session_end"),
         F.count("*").alias("n_events"),
-    )
-
-
-def sessionize_tws(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """:func:`sessionize` on Spark 4's ``transformWithStateInPandas``
-    (the successor stateful API) — same output contract, pytest-pinned
-    equal to the ``applyInPandasWithState`` form and the batch oracle.
-
-    Why keep both: ``transformWithState`` is the forward-looking scale
-    path — typed state variables (ListState here; the buffer is a
-    first-class list, not a re-serialized blob), MULTIPLE independent
-    timers per key, state TTL, and first-class RocksDB state-store
-    integration with state schema evolution. The legacy form stays as
-    the parity/compat twin. REQUIRES the RocksDB state store provider
-    (set ``spark.sql.streaming.stateStore.providerClass`` to
-    ``...state.RocksDBStateStoreProvider`` before starting the query —
-    Spark enforces this for transformWithState); the
-    ``applyInPandasWithState`` twin runs on any provider.
-
-    Semantics (identical to :func:`sessionize`): events buffer in
-    per-key ListState; a session emits ``final=True`` exactly once,
-    when the watermark passes ``session_end + gap``; quiet keys flush
-    via an event-time timer registered at the earliest open session's
-    close point. Timers are REPLACED on every invocation (delete +
-    re-register) so each key holds at most one pending timer.
-
-    ALSO requires ``protobuf`` (PySpark's transformWithState state
-    server speaks protobuf between the JVM and the Python workers) —
-    absent on this sandbox, so the runtime path is environment-gated
-    exactly like the Kafka socket and Pillow decodes: the operator
-    preflights the import and raises with guidance instead of letting
-    the query die with an opaque
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE at start; the
-    pytest is skip-primed and runs wherever protobuf exists."""
-    _require_tws_protobuf("sessionize_tws", "sessionize()")
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    gap_us = gap_seconds * 1_000_000
-
-    class Proc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._buf = handle.getListState("buf", "t bigint")
-
-        def _evaluate(
-            self, user_id: int, new_times: list[int], wm_ms: int
-        ) -> Iterator[pd.DataFrame]:
-            buf = (
-                [r[0] for r in self._buf.get()]
-                if self._buf.exists()
-                else []
-            )
-            buf.extend(new_times)
-            if not buf:
-                self._buf.clear()
-                return
-            buf.sort()
-            wm_us = wm_ms * 1000
-            sessions = _split_sessions(buf, gap_us)
-            closed = [s for s in sessions if s[1] + gap_us < wm_us]
-            open_ = [s for s in sessions if s[1] + gap_us >= wm_us]
-            remaining = [
-                t
-                for t in buf
-                if not any(s[0] <= t <= s[1] for s in closed)
-            ]
-            for tm in list(self._handle.listTimers()):
-                self._handle.deleteTimer(tm)
-            if remaining:
-                self._buf.clear()
-                self._buf.put([(t,) for t in remaining])
-                earliest_close_ms = (
-                    min(s[1] for s in open_) // 1000
-                    + gap_seconds * 1000
-                    + 1
-                )
-                self._handle.registerTimer(
-                    max(earliest_close_ms, wm_ms + 1)
-                )
-            else:
-                self._buf.clear()
-            if closed:
-                yield _emit(user_id, closed, True)
-
-        def handleInputRows(
-            self, key: tuple, rows, timerValues: TimerValues
-        ) -> Iterator[pd.DataFrame]:
-            new_times: list[int] = []
-            for pdf in rows:
-                new_times.extend(
-                    int(v.value // 1000) for v in pd.to_datetime(pdf["ts"])
-                )
-            yield from self._evaluate(
-                key[0], new_times, timerValues.getCurrentWatermarkInMs()
-            )
-
-        def handleExpiredTimer(
-            self,
-            key: tuple,
-            timerValues: TimerValues,
-            expiredTimerInfo: ExpiredTimerInfo,
-        ) -> Iterator[pd.DataFrame]:
-            yield from self._evaluate(
-                key[0], [], timerValues.getCurrentWatermarkInMs()
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            Proc(),
-            outputStructType=SESSION_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
     )
 
 
@@ -395,111 +116,6 @@ def dedup_within_watermark(
     """
     return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         keys
-    )
-
-
-def _require_tws_protobuf(op_name: str, fallback: str) -> None:
-    """Preflight for the transformWithState operators: PySpark's TWS
-    Python state server speaks protobuf (StateMessage_pb2) and its
-    driver worker crashes at query start with an opaque
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE when the package is
-    missing (root-caused live on this sandbox, r15). Fail fast at
-    plan construction with guidance instead."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as ex:
-        raise RuntimeError(
-            f"{op_name} needs the 'protobuf' package: PySpark's "
-            "transformWithState Python state server is protobuf-based "
-            "and its worker crashes at query start without it. Install "
-            f"protobuf, or use {fallback} — the executable twin."
-        ) from ex
-
-
-#: running per-key aggregate state for ``running_stats``
-_RUNNING_STATE_SCHEMA = "n bigint, total double, last_us bigint"
-
-RUNNING_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("n_events", T.LongType(), True),
-        T.StructField("sum_value", T.DoubleType(), True),
-        T.StructField("last_us", T.LongType(), True),
-    ]
-)
-
-
-class _RunningStatsProcessor:
-    """StatefulProcessor maintaining (count, sum, max event-time µs)
-    per user across micro-batches; emits the UPDATED running totals for
-    every key touched in a batch. Duck-typed against
-    ``pyspark.sql.streaming.stateful_processor.StatefulProcessor`` so
-    importing this module never requires the streaming extras."""
-
-    def init(self, handle) -> None:
-        self._agg = handle.getValueState("agg", _RUNNING_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        n, total, last = 0, 0.0, None
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].fillna(0.0).sum())
-            if len(pdf):
-                m = int(pdf["ts_us"].max())
-                last = m if last is None or m > last else last
-        if self._agg.exists():
-            p_n, p_total, p_last = self._agg.get()
-            n += p_n
-            total += p_total
-            if p_last is not None and (last is None or p_last > last):
-                last = p_last
-        self._agg.update((n, total, last))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "sum_value": [total],
-                "last_us": [last],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_stats(events: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Cross-batch running per-user aggregates via Spark 4's
-    ``transformWithStateInPandas`` (the successor stateful API to
-    ``applyInPandasWithState`` — typed state variables on the RocksDB
-    state store; T7 surface, beyond the reference which keeps no
-    cross-batch state).
-
-    Emits one row per (touched user, micro-batch) carrying the running
-    ``(n_events, sum_value, last_us)`` AFTER folding that batch — so
-    the max-``n_events`` row per user equals the all-time batch
-    aggregate, which is what the stream==batch test pins. State is one
-    fixed-width tuple per user: executors shard it by the groupBy key
-    and a 1000-executor job holds |users| tuples total, independent of
-    event volume.
-
-    Environment note: the transformWithState state-server protocol
-    needs ``google.protobuf`` at runtime (StateMessage_pb2), which
-    this sandbox lacks — the e2e test importorskips on it (same
-    posture as the Kafka source) and the executed stateful path here
-    remains ``sessionize``'s applyInPandasWithState. Fails fast at
-    plan construction with guidance when protobuf is absent (r15).
-    """
-    _require_tws_protobuf("running_stats", "agg_state/maintain_agg_state")
-    prepared = events.select(
-        F.col("user_id"),
-        F.col("value").cast("double").alias("value"),
-        F.unix_micros(F.col(ts_col)).alias("ts_us"),
-    )
-    return prepared.groupBy("user_id").transformWithStateInPandas(
-        _RunningStatsProcessor(),
-        RUNNING_STATS_SCHEMA,
-        outputMode="update",
-        timeMode="none",
     )
 
 

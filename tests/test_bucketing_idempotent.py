@@ -133,3 +133,22 @@ def test_idempotent_sink_distinct_batches_accumulate(spark, taxi_batch, tmp_path
     raw = spark.read.json(f"{out}/raw")
     assert raw.count() == 24
     assert raw.select("batch_id").distinct().count() == 2
+
+
+def test_idempotent_sinks_leave_session_conf_unchanged(spark, taxi_batch, tmp_path):
+    """Dynamic partition overwrite is a per-writer option: the sink
+    writes must neither read nor change the session's
+    partitionOverwriteMode, which every other query on the session
+    shares. Under a STATIC session default, distinct batches must
+    still accumulate (a static overwrite would wipe batch 1)."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        out = str(tmp_path / "conf")
+        process_batch(taxi_batch, 1, out, idempotent=True)
+        process_batch(taxi_batch, 2, out, idempotent=True)
+        assert spark.conf.get(key) == "STATIC"
+        assert spark.read.json(f"{out}/raw").count() == 24
+    finally:
+        spark.conf.set(key, prev)

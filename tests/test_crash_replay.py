@@ -22,8 +22,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryException
 
 from esgi_4iabd2_sparkstreaming_groupe13_spark.config import ConsumerConfig
+from esgi_4iabd2_sparkstreaming_groupe13_spark.sources.stream import (
+    create_trip_stream,
+)
 from esgi_4iabd2_sparkstreaming_groupe13_spark.streaming.processor import (
-    build_trip_pipeline,
     process_batch,
     start_consumer,
 )
@@ -58,7 +60,9 @@ def _run_with_crash(spark, root, idempotent: bool) -> ConsumerConfig:
             raise RuntimeError("injected crash after sink writes")
 
     q = (
-        build_trip_pipeline(spark, cfg)
+        create_trip_stream(
+            spark, cfg.input_dir, max_files_per_trigger=cfg.max_files_per_trigger
+        )
         .writeStream.outputMode("append")
         .option("checkpointLocation", cfg.checkpoint_dir)
         .foreachBatch(crashing_batch)

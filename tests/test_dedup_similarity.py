@@ -1051,6 +1051,29 @@ def test_kmeans_l2_recovers_separated_cluster_means(spark):
         similarity.kmeans_fit(df, k=2, metric="manhattan")
 
 
+def test_kmeans_fit_releases_persisted_source_on_failure(spark, monkeypatch):
+    """A fit that dies mid-way (in this test: at the first farthest-point
+    seeding round, after the seed scan has filled the cache) must still
+    unpersist its normalized source — no cached frame outlives a
+    failed call."""
+    rows = [(i, [float(i % 3), 1.0, float(i % 5)]) for i in range(30)]
+    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+
+    def persistent_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("injected mid-fit failure")
+
+    before = persistent_ids()
+    monkeypatch.setattr(similarity, "cosine_expr", boom)
+    with pytest.raises(RuntimeError, match="injected mid-fit failure"):
+        similarity.kmeans_fit(df, k=3, max_iterations=5)
+    # ids present before may vanish (the context cleaner drops
+    # unreferenced checkpoints asynchronously); none may be added
+    assert persistent_ids() - before == set()
+
+
 def test_pq_encode_deterministic_and_bounded(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     cb = similarity.pq_train(emb, 64, m=8, max_iterations=4)

@@ -1,10 +1,9 @@
 """Event-time windows + watermark on REAL streams (T5/T6 upgrade), and
-the custom stateful sessionization operator (T7 upgrade)."""
+stateful streaming sessionization (T7 upgrade)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from esgi_4iabd2_sparkstreaming_groupe13_spark.operators.windows import (
     sliding_window_agg,
@@ -12,8 +11,8 @@ from esgi_4iabd2_sparkstreaming_groupe13_spark.operators.windows import (
 )
 from esgi_4iabd2_sparkstreaming_groupe13_spark.sources.batch import load_table
 from esgi_4iabd2_sparkstreaming_groupe13_spark.streaming.stateful import (
-    sessionize,
     sessionize_batch_oracle,
+    sessionize_native,
 )
 
 
@@ -118,20 +117,22 @@ def test_sessionize_on_rocksdb_state_store(spark, events_stream_dir, tmp_path):
             .json(events_stream_dir["dir"] + "/src")
         )
         GAP = 6 * 3600
-        sessions = sessionize(stream, gap_seconds=GAP, watermark="12 hours")
+        sessions = sessionize_native(
+            stream, gap_seconds=GAP, watermark="12 hours"
+        )
         got = _run_stream_to_memory(
             spark, sessions, "sessions_rocks", str(tmp_path / "ckpt_rocks")
         )
-        got_final = {
+        got_set = {
             (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-            for r in got.filter(F.col("final")).collect()
+            for r in got.collect()
         }
         oracle_all = {
             (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
             for r in sessionize_batch_oracle(ev, gap_seconds=GAP).collect()
         }
-        assert got_final
-        assert got_final <= oracle_all
+        assert got_set
+        assert got_set <= oracle_all
     finally:
         if prev:
             spark.conf.set(
@@ -167,7 +168,7 @@ def test_streaming_dedup_with_watermark(spark, events_stream_dir, tmp_path):
 
 
 def test_sessionize_stream_matches_batch_oracle(spark, events_stream_dir):
-    """Custom stateful operator: closed streaming sessions == batch
+    """Streaming sessionizer: sessions the watermark closed == batch
     gaps-and-islands sessions (for users whose sessions closed)."""
     ev = events_stream_dir["events"]
     stream = (
@@ -176,15 +177,15 @@ def test_sessionize_stream_matches_batch_oracle(spark, events_stream_dir):
         .json(events_stream_dir["dir"] + "/src")
     )
     GAP = 6 * 3600  # 6h inactivity gap → several sessions per user
-    sessions = sessionize(stream, gap_seconds=GAP, watermark="12 hours")
+    sessions = sessionize_native(stream, gap_seconds=GAP, watermark="12 hours")
     got = _run_stream_to_memory(
         spark, sessions, "sessions_mem", events_stream_dir["dir"] + "/ckpt_s"
     )
     oracle = sessionize_batch_oracle(ev, gap_seconds=GAP)
 
-    got_final = {
+    got_set = {
         (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in got.filter(F.col("final")).collect()
+        for r in got.collect()
     }
     oracle_all = {
         (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
@@ -192,23 +193,19 @@ def test_sessionize_stream_matches_batch_oracle(spark, events_stream_dir):
     }
     # every watermark-finalized streaming session is a true batch
     # session — exactly-once and immutable
-    assert got_final, "no sessions finalized during the run"
-    assert got_final <= oracle_all
+    assert got_set, "no sessions finalized during the run"
+    assert got_set <= oracle_all
     # and finalized sessions account for most batch sessions (the tail
     # within watermark+gap of stream end legitimately stays open)
-    assert len(got_final) / len(oracle_all) > 0.5
+    assert len(got_set) / len(oracle_all) > 0.5
 
 
 def test_session_window_native_stream_matches_batch(spark, events_stream_dir):
     """Native session_window operator (fully JVM-side): streaming
     append-mode sessions must be a subset of (and cover most of) the
-    SAME operator's batch result — which in turn equals the custom
-    stateful operator's oracle (pinned by q_session_window's DuckDB
+    SAME operator's batch result — which in turn equals the
+    gaps-and-islands oracle (pinned by q_session_window's DuckDB
     gate)."""
-    from esgi_4iabd2_sparkstreaming_groupe13_spark.streaming.stateful import (
-        sessionize_native,
-    )
-
     ev = events_stream_dir["events"]
     stream = (
         spark.readStream.schema(ev.schema)
@@ -234,8 +231,8 @@ def test_session_window_native_stream_matches_batch(spark, events_stream_dir):
     assert got_set, "no sessions emitted during the run"
     assert got_set <= batch_set
     assert len(got_set) / len(batch_set) > 0.5
-    # and the native batch form agrees exactly with the custom
-    # operator's gaps-and-islands oracle
+    # and the native batch form agrees exactly with the
+    # gaps-and-islands oracle
     oracle_set = {
         (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
         for r in sessionize_batch_oracle(ev, gap_seconds=GAP).collect()
@@ -281,100 +278,3 @@ def test_streaming_admission_filter_matches_batch(spark, tmp_path):
     assert {r.doc_id for r in got.collect()} == {
         r.doc_id for r in batch.collect()
     }
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def test_sessionize_tws_protobuf_gate(spark):
-    """The env gate itself: without protobuf, sessionize_tws must fail
-    FAST at plan construction with actionable guidance — not let the
-    streaming query die at start with an opaque runner-init crash
-    (which is what the raw API does; verified live on this box)."""
-    from esgi_4iabd2_sparkstreaming_groupe13_spark.streaming.stateful import (
-        sessionize_tws,
-    )
-
-    if _has_protobuf():
-        pytest.skip("protobuf present — gate exercised by the parity test")
-    stream = spark.readStream.format("rate").load().selectExpr(
-        "value as user_id", "timestamp as ts"
-    )
-    with pytest.raises(RuntimeError, match="protobuf"):
-        sessionize_tws(stream)
-
-
-def test_sessionize_tws_matches_legacy_and_oracle(spark, events_stream_dir, tmp_path):
-    """r15: the transformWithStateInPandas sessionizer (Spark 4
-    successor stateful API — typed ListState + explicit event-time
-    timers, RocksDB-required) must emit exactly the same final
-    sessions as the applyInPandasWithState form on the same staged
-    stream, and both must be subsets of the batch gaps-and-islands
-    oracle. Env-gated: PySpark's transformWithState state server
-    needs protobuf (absent on this sandbox — skip primed, same
-    pattern as the Kafka socket test)."""
-    from esgi_4iabd2_sparkstreaming_groupe13_spark.streaming.stateful import (
-        sessionize_tws,
-    )
-
-    if not _has_protobuf():
-        pytest.skip(
-            "protobuf absent: transformWithState's Python state server "
-            "cannot start (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE)"
-        )
-
-    ev = events_stream_dir["events"]
-    GAP = 6 * 3600
-
-    def run(make, name, provider=None):
-        prev = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", ""
-        )
-        if provider:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", provider
-            )
-        try:
-            stream = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 2)
-                .json(events_stream_dir["dir"] + "/src")
-            )
-            out = make(stream, gap_seconds=GAP, watermark="12 hours")
-            got = _run_stream_to_memory(
-                spark, out, name, str(tmp_path / f"ckpt_{name}")
-            )
-            return {
-                (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-                for r in got.filter(F.col("final")).collect()
-            }
-        finally:
-            if prev:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev
-                )
-            else:
-                spark.conf.unset(
-                    "spark.sql.streaming.stateStore.providerClass"
-                )
-
-    tws = run(
-        sessionize_tws,
-        "sessions_tws",
-        provider="org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    legacy = run(sessionize, "sessions_legacy_cmp")
-    oracle = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in sessionize_batch_oracle(ev, gap_seconds=GAP).collect()
-    }
-    assert tws
-    assert tws == legacy
-    assert tws <= oracle

@@ -3,7 +3,6 @@ streaming dedup (``dropDuplicatesWithinWatermark``)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from esgi_4iabd2_sparkstreaming_groupe13_spark.operators.projections import (
@@ -89,85 +88,3 @@ def test_dedup_within_watermark_drops_replayed_rows(spark, sf_dir, tmp_path):
     n_expected = ev.count()
     assert out.count() == n_expected
     assert out.select("event_id").distinct().count() == n_expected
-
-
-def test_running_stats_transform_with_state(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas running aggregates: after draining
-    the whole stream, each user's max-n_events row must equal the
-    one-shot batch aggregate (count / sum / max event time).
-
-    The transformWithState state-server protocol speaks protobuf
-    (pyspark/sql/streaming/proto/StateMessage_pb2), so the API needs
-    the ``google.protobuf`` package at RUNTIME — absent in this
-    sandbox (no installs). Same posture as the Kafka source: the
-    operator is implemented and this e2e test runs wherever protobuf
-    exists; the executed stateful path in this environment remains
-    applyInPandasWithState (sessionize)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState state-server protocol needs protobuf",
-    )
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id", "value")
-        .filter(F.col("user_id") % 5 == 0)
-    )
-    src = str(tmp_path / "src")
-    ev.repartitionByRange(4, "ts").sortWithinPartitions("ts").write.mode(
-        "overwrite"
-    ).json(src)
-    ev_json = spark.read.schema(ev.schema).json(src)
-
-    from esgi_4iabd2_sparkstreaming_groupe13_spark.streaming.stateful import (
-        running_stats,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-        )
-        out = running_stats(stream, ts_col="ts")
-        q = (
-            out.writeStream.format("memory")
-            .queryName("running_stats")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(600), "stream did not terminate within 600s"
-        emitted = spark.table("running_stats")
-        # latest emission per user == the row with the largest n_events
-        latest = {
-            r["user_id"]: (r["n_events"], r["sum_value"], r["last_us"])
-            for r in emitted.orderBy("n_events").collect()
-        }
-        oracle = {
-            r["user_id"]: (r["n"], r["s"], r["last_us"])
-            for r in ev_json.groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.coalesce(F.col("value"), F.lit(0.0))).alias("s"),
-                F.max(F.unix_micros("ts")).alias("last_us"),
-            )
-            .collect()
-        }
-        assert set(latest) == set(oracle)
-        for u, (n, s, last) in oracle.items():
-            gn, gs, glast = latest[u]
-            assert gn == n and glast == last
-            assert abs(gs - s) < 1e-6 * max(1.0, abs(s))
-    finally:
-        if prev:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
